@@ -3,7 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   // Headline subset: the driver captures only the last ~2000 chars of
   // stdout, and a per-query map over the full inventory overflows that
-  // window (round 1's JSON line was ~2.7 KB and parsed as null). The 36
+  // window (round 1's JSON line was ~2.7 KB and parsed as null). The
   // headline queries cover every operator family — scans/aggs (a*),
   // join shapes (h*/j*), windows (w*), dedup (d*), similarity (s*),
   // text (t*), multimodal (m*), regex (p*) — including the slowest

@@ -38,7 +38,7 @@ object Dedup {
   private val liveCaches = new scala.collection.mutable.ArrayBuffer[DataFrame]
 
   private def shared(df: DataFrame): DataFrame = liveCaches.synchronized {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = ArtifactCache.persist(df)
     liveCaches += p
     p
   }
@@ -60,31 +60,15 @@ object Dedup {
   }
 
   /** Release ALL persisted dedup state: the transient pipeline
-    * intermediates, the memoized chain relations, and the memoized
-    * verified-pairs relations. */
+    * intermediates and every memoized artifact. One cache at a time, so
+    * no two locks are ever held here. */
   def releaseCaches(): Unit = {
     freshPipeline()
-    // separate sync blocks: never hold two locks at once (verifiedPairs
-    // takes pairsMemo → liveCaches; a combined block here would invert)
-    chainMemo.synchronized {
-      chainMemo.valuesIterator.foreach(c =>
-        Seq(c.sh, c.sig, c.cands).foreach(_.unpersist(blocking = false)))
-      chainMemo.clear()
-    }
-    pairsMemo.synchronized {
-      pairsMemo.valuesIterator.foreach(_.unpersist(blocking = false))
-      pairsMemo.clear()
-    }
-    bloomMemo.synchronized(bloomMemo.clear()) // driver objects, no unpersist
-    labelsMemo.synchronized {
-      labelsMemo.valuesIterator.foreach(_.unpersist(blocking = false))
-      labelsMemo.clear()
-    }
-    simMemo.synchronized {
-      simMemo.valuesIterator.foreach(c =>
-        Seq(c.sig, c.cands).foreach(_.unpersist(blocking = false)))
-      simMemo.clear()
-    }
+    chainMemo.clear()
+    pairsMemo.clear()
+    bloomMemo.clear()
+    labelsMemo.clear()
+    simMemo.clear()
   }
 
   /** Distinct character n-gram shingles per doc — (doc_id, s). Docs
@@ -309,36 +293,17 @@ object Dedup {
         val sh = shared(wordShingles(docs))
         val sig = shared(signaturesFrom(sh, k))
         Chain(sh, sig, shared(candidatesFromBanded(bandedFromSig(sig, k, bands))))
-      case Some(srcKey) => chainMemo.synchronized {
-        val key = (srcKey, k, bands)
-        chainMemo.get(key) match {
-          case Some(c) if c.cands.storageLevel !=
-              org.apache.spark.storage.StorageLevel.NONE =>
-            chainMemo.remove(key); chainMemo(key) = c // LRU touch
-            c
-          case _ =>
-            def p(df: DataFrame) =
-              df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val sh = p(wordShingles(docs))
-            val sig = p(signaturesFrom(sh, k))
-            val c = Chain(sh, sig, p(candidatesFromBanded(bandedFromSig(sig, k, bands))))
-            chainMemo(key) = c
-            // bounded: evict the least-recently-used chain beyond the cap
-            // (a long-running session over many corpora must not pin one
-            // persisted chain per corpus forever)
-            while (chainMemo.size > ChainMemoMax) {
-              val (_, old) = chainMemo.head
-              chainMemo.remove(chainMemo.head._1)
-              Seq(old.sh, old.sig, old.cands).foreach(_.unpersist(blocking = false))
-            }
-            c
-        }
+      case Some(srcKey) => chainMemo((srcKey, k, bands)) {
+        val sh = ArtifactCache.persist(wordShingles(docs))
+        val sig = ArtifactCache.persist(signaturesFrom(sh, k))
+        Chain(sh, sig, ArtifactCache.persist(candidatesFromBanded(bandedFromSig(sig, k, bands))))
       }
     }
 
-  private val ChainMemoMax = 4
-  private val chainMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Int, Int), Chain]
+  // bounded: a long-running session over many corpora must not pin one
+  // persisted chain per corpus forever
+  private val chainMemo = new ArtifactCache[(String, Int, Int), Chain](4,
+    c => ArtifactCache.isPersisted(c.cands), c => ArtifactCache.unpersist(c.sh, c.sig, c.cands))
 
   /** LSH banding: k mins split into `bands` bands of k/bands rows; band
     * key = md5 of the concatenated band slice. Docs sharing ANY band key
@@ -458,39 +423,23 @@ object Dedup {
     * ([[jaccardVerified]] = sorted view, [[verifiedPairs]] = (i, j)
     * projection for clustering/curation). */
   private def verifiedRelation(docs: DataFrame, threshold: Double,
-                               k: Int, bands: Int): DataFrame = pairsMemo.synchronized {
+                               k: Int, bands: Int): DataFrame =
     fileBackedKey(docs) match {
       case None =>
         freshPipeline()
         shared(jaccardCore(docs, threshold, k, bands))
-      case Some(srcKey) =>
-        val key = (srcKey, threshold, k, bands)
-        pairsMemo.get(key) match {
-          case Some(p) if p.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
-            pairsMemo.remove(key); pairsMemo(key) = p // LRU touch
-            p
-          case _ =>
-            freshPipeline()
-            // persisted OUTSIDE liveCaches: other dedup queries' clear-
-            // then-build must not evict the cross-query verified relation
-            // (only the explicit releaseCaches hook does)
-            val p = jaccardCore(docs, threshold, k, bands)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            pairsMemo(key) = p
-            // bounded, LRU: a long session over many (corpus, threshold)
-            // combinations must not pin one persisted relation each forever
-            while (pairsMemo.size > PairsMemoMax) {
-              val oldKey = pairsMemo.head._1
-              pairsMemo.remove(oldKey).foreach(_.unpersist(blocking = false))
-            }
-            p
-        }
+      case Some(srcKey) => pairsMemo((srcKey, threshold, k, bands)) {
+        freshPipeline()
+        // persisted OUTSIDE liveCaches: other dedup queries' clear-
+        // then-build must not evict the cross-query verified relation
+        // (only the explicit releaseCaches hook does)
+        ArtifactCache.persist(jaccardCore(docs, threshold, k, bands))
+      }
     }
-  }
 
-  private val PairsMemoMax = 8
-  private val pairsMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Double, Int, Int), DataFrame]
+  // bounded, LRU: a long session over many (corpus, threshold)
+  // combinations must not pin one persisted relation each forever
+  private val pairsMemo = ArtifactCache.relations[(String, Double, Int, Int)](8)
 
   /** See [[SnapshotKey.of]] — shared with the similarity trainers. */
   private def fileBackedKey(df: DataFrame): Option[String] = SnapshotKey.of(df)
@@ -566,33 +515,17 @@ object Dedup {
     * skip memoization (no stable identity), like every other memo. */
   private def verifiedLabels(docs: DataFrame, threshold: Double, k: Int,
                              bands: Int, maxIter: Int): DataFrame =
-    labelsMemo.synchronized {
-      fileBackedKey(docs) match {
-        case None =>
-          shared(ConnectedComponents.minLabelOverEndpoints(
-            verifiedPairs(docs, threshold, k, bands), maxIter))
-        case Some(srcKey) =>
-          val key = (srcKey, threshold, k, bands, maxIter)
-          labelsMemo.get(key) match {
-            case Some(l) if l.storageLevel != org.apache.spark.storage.StorageLevel.NONE =>
-              labelsMemo.remove(key); labelsMemo(key) = l // LRU touch
-              l
-            case _ =>
-              val l = ConnectedComponents.minLabelOverEndpoints(
-                verifiedPairs(docs, threshold, k, bands), maxIter)
-                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              labelsMemo(key) = l
-              while (labelsMemo.size > PairsMemoMax) {
-                val oldKey = labelsMemo.head._1
-                labelsMemo.remove(oldKey).foreach(_.unpersist(blocking = false))
-              }
-              l
-          }
+    fileBackedKey(docs) match {
+      case None =>
+        shared(ConnectedComponents.minLabelOverEndpoints(
+          verifiedPairs(docs, threshold, k, bands), maxIter))
+      case Some(srcKey) => labelsMemo((srcKey, threshold, k, bands, maxIter)) {
+        ArtifactCache.persist(ConnectedComponents.minLabelOverEndpoints(
+          verifiedPairs(docs, threshold, k, bands), maxIter))
       }
     }
 
-  private val labelsMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Double, Int, Int, Int), DataFrame]
+  private val labelsMemo = ArtifactCache.relations[(String, Double, Int, Int, Int)](8)
 
   /** Cluster resolution over an ALREADY-COMPUTED pairs relation —
     * composes with [[verifiedPairs]] in-process or with
@@ -746,34 +679,17 @@ object Dedup {
     * contract: the key binds the file-index snapshot, so an appended
     * corpus keys differently and can never serve stale signatures. */
   private final case class SimChain(sig: DataFrame, cands: DataFrame)
-  private val SimMemoMax = 4
-  private val simMemo =
-    new scala.collection.mutable.LinkedHashMap[String, SimChain]
+  private val simMemo = new ArtifactCache[String, SimChain](4,
+    c => ArtifactCache.isPersisted(c.sig), c => ArtifactCache.unpersist(c.sig, c.cands))
 
   private def simChainOf(docs: DataFrame): SimChain =
     fileBackedKey(docs) match {
       case None =>
         val sig = shared(simhashSig(docs))
         SimChain(sig, shared(simhashCandsFrom(sig)))
-      case Some(srcKey) => simMemo.synchronized {
-        simMemo.get(srcKey) match {
-          case Some(c) if c.sig.storageLevel !=
-              org.apache.spark.storage.StorageLevel.NONE =>
-            simMemo.remove(srcKey); simMemo(srcKey) = c // LRU touch
-            c
-          case _ =>
-            def p(df: DataFrame) =
-              df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            val sig = p(simhashSig(docs))
-            val c = SimChain(sig, p(simhashCandsFrom(sig)))
-            simMemo(srcKey) = c
-            while (simMemo.size > SimMemoMax) {
-              val (k0, old) = simMemo.head
-              simMemo.remove(k0)
-              Seq(old.sig, old.cands).foreach(_.unpersist(blocking = false))
-            }
-            c
-        }
+      case Some(srcKey) => simMemo(srcKey) {
+        val sig = ArtifactCache.persist(simhashSig(docs))
+        SimChain(sig, ArtifactCache.persist(simhashCandsFrom(sig)))
       }
     }
 
@@ -994,7 +910,8 @@ object Dedup {
   /** PRODUCTION twin of [[decontaminateAgainst]]: both sides join on
     * `xxhash64(shingle)` — 8-byte keys instead of ~20-char strings cut
     * the broadcast probe + per-doc aggregate ~30% (whole query 15%,
-    * 9.4 s → 7.9 s at the 500k-doc/25M-shingle replica, ShingleProbe).
+    * 9.4 s → 7.9 s at the 500k-doc/25M-shingle replica, SCALE.md's
+    * shingle-consumer table).
     * A corpus↔eval cross-collision would inflate n_overlap by one:
     * odds ~|corpus shingles|·|eval shingles|/2^64 ≈ 1e-9 at benchmark
     * scale — the [[lshCandidatesXx]] trade. Not DuckDB-mirrorable (no
@@ -1016,9 +933,8 @@ object Dedup {
   // eval-side Bloom filters keyed on (eval SnapshotKey, fpp) — driver
   // objects (~1.8 bytes/shingle at fpp 1e-3), LRU-bounded like the
   // trained-artifact memos in Similarity; cleared by [[releaseCaches]]
-  private val BloomMemoMax = 4
   private val bloomMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Double), org.apache.spark.util.sketch.BloomFilter]
+    new ArtifactCache[(String, Double), org.apache.spark.util.sketch.BloomFilter](4)
 
   /** Bloom filter over the eval side's distinct shingles — the
     * decontamination form for when the eval set OUTGROWS an exact
@@ -1145,24 +1061,8 @@ object Dedup {
     // SnapshotKey includes the file listing, so an eval suite that
     // changes under the same path keys differently — never stale.
     val memoKey = SnapshotKey.of(evalDocs).map((_, fpp))
-    val memoHit = memoKey.flatMap { mk =>
-      bloomMemo.synchronized {
-        bloomMemo.get(mk).map { f =>
-          bloomMemo.remove(mk); bloomMemo(mk) = f // LRU touch
-          f
-        }
-      }
-    }
-    val bf = memoHit.getOrElse {
-      val built = evalShingleBloomOf(set, fpp)
-      memoKey.foreach { mk =>
-        bloomMemo.synchronized {
-          bloomMemo(mk) = built
-          while (bloomMemo.size > BloomMemoMax) bloomMemo.remove(bloomMemo.head._1)
-        }
-      }
-      built
-    }
+    val bf = memoKey.fold(evalShingleBloomOf(set, fpp))(
+      bloomMemo(_)(evalShingleBloomOf(set, fpp)))
     val exact = decontaminateAgainstPrepared(corpus, set, minOverlap)
     val bloom = decontaminateBloom(corpus, bf, minOverlap)
       .select(col("doc_id"), col("n_bloom_overlap"))

@@ -164,7 +164,7 @@ object Similarity {
     * broadcast side, so the candidate scan is unchanged); no pair can
     * appear twice because a candidate lives in exactly one bucket.
     * Radius is the recall/probe-count dial — measured per radius in
-    * SCALE.md's recall table (RecallProbe). */
+    * SCALE.md's "Recall, measured" table. */
   def knnLshMultiprobe(emb: DataFrame, nQueries: Int, k: Int,
                        planes: Int = 8, radius: Int = 1): DataFrame = {
     require(radius == 1 || radius == 2, s"radius 1 or 2, got $radius")
@@ -207,28 +207,23 @@ object Similarity {
     // changed/appended corpus keys differently; in-memory frames carry
     // no stable identity and train fresh every call.
     val memoKey = SnapshotKey.of(emb).map((_, k, iterations))
-    val memoHit: Option[Array[(Int, Seq[Double])]] = memoKey.flatMap { mk =>
-      centsMemo.synchronized {
-        centsMemo.get(mk).map { rows =>
-          centsMemo.remove(mk); centsMemo(mk) = rows // LRU touch
-          rows
-        }
-      }
-    }
-    memoHit match {
-      case Some(rows) => return rows.toSeq.toDF("cell", "centv")
-      case None => ()
-    }
-    val vecs = emb.select(col("vec_id"),
-      transform(col("embedding"), x => x.cast("double")).as("v"))
+    val centRows = memoKey.fold(trainCentroids(emb, k, iterations))(
+      centsMemo(_)(trainCentroids(emb, k, iterations)))
     // Centroids live on the DRIVER between iterations (k × dim doubles —
     // trivially small; MLlib's KMeans does the same). Folding them back
     // into the plan as a LocalRelation keeps every iteration's lineage
     // FLAT: without this, iteration i's plan embeds iteration i-1's
     // whole plan, and the two downstream consumers (assign + probe) each
     // re-execute the full training — measured ~4× blowup at sf0.1.
-    def toLocal(rows: Array[(Int, Seq[Double])]): DataFrame =
-      rows.toSeq.toDF("cell", "centv")
+    centRows.toSeq.toDF("cell", "centv")
+  }
+
+  private def trainCentroids(emb: DataFrame, k: Int,
+                             iterations: Int): Array[(Int, Seq[Double])] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
+    val vecs = emb.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("v"))
     var centRows: Array[(Int, Seq[Double])] = vecs.filter(col("vec_id") < k)
       .select(col("vec_id").cast("int").as("cell"), col("v").as("centv"))
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
@@ -263,35 +258,21 @@ object Similarity {
         (cell, next.getOrElse(cell, prev))
       }
     }
-    memoKey.foreach { mk =>
-      centsMemo.synchronized {
-        centsMemo(mk) = centRows
-        while (centsMemo.size > TrainMemoMax) centsMemo.remove(centsMemo.head._1)
-      }
-    }
-    toLocal(centRows)
+    centRows
   }
 
-  private val TrainMemoMax = 4
-  private val centsMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Int, Int), Array[(Int, Seq[Double])]]
-  private val booksMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Int, Int, Int), Array[(Int, Int, Seq[Double])]]
+  private val centsMemo = new ArtifactCache[(String, Int, Int), Array[(Int, Seq[Double])]](4)
+  private val booksMemo = new ArtifactCache[(String, Int, Int, Int), Array[(Int, Int, Seq[Double])]](4)
   // the ENCODED index (vec_id, subspace, code) — m small ints per vector,
   // the artifact "that lets a 100 TB corpus' index live in executor
   // memory" (see knnPq doc); persisted, so release via releaseCaches
-  private val codesMemo =
-    new scala.collection.mutable.LinkedHashMap[(String, Int, Int, Int), DataFrame]
+  private val codesMemo = ArtifactCache.relations[(String, Int, Int, Int)](4)
 
-  /** Release the persisted PQ index relations (the trained centroid /
-    * codebook arrays are driver-local and just drop with the map). */
+  /** Release the trained artifacts and the persisted PQ index relations. */
   def releaseCaches(): Unit = {
-    centsMemo.synchronized(centsMemo.clear())
-    booksMemo.synchronized(booksMemo.clear())
-    codesMemo.synchronized {
-      codesMemo.valuesIterator.foreach(_.unpersist(blocking = false))
-      codesMemo.clear()
-    }
+    centsMemo.clear()
+    booksMemo.clear()
+    codesMemo.clear()
   }
 
   /** Centroid tables localized to the driver — they are k×dim doubles by
@@ -318,14 +299,15 @@ object Similarity {
   /** One Lloyd iteration's IVF assignment — (v, cell) with the in-row
     * [[argminCell]] over driver-held centroids (cells ascending). Shared
     * by the [[kmeansCentroids]] loop (see the comment there for the
-    * bit-exactness contract) and LloydProbe's committed plan evidence.
+    * bit-exactness contract) and the PlanSpec plan pin.
     *
     * The Σc² constants are INLINE double literals, deliberately: an
     * `element_at(refArray, nonfoldable-1 + i)` variant (tried first on a
     * "changed literals force per-iteration Janino recompiles" theory)
     * measured SLOWER in both planning and execution, and a perturbed-
-    * literal probe (LloydProbe diag3) showed re-planning with fresh
-    * values costs only a small, decaying warmup — not a full recompile. */
+    * literal probe showed re-planning with fresh values costs only a
+    * small, decaying warmup — not a full recompile (OPTIMIZATION_r15.md,
+    * VERDICT item 1). */
   private[graft] def lloydAssignIvf(vecs: DataFrame,
                                         centRows: Seq[(Int, Seq[Double])]): DataFrame = {
     val dists = centRows.map { case (_, cv) =>
@@ -578,18 +560,15 @@ object Similarity {
     import spark.implicits._
     // same trained-artifact memo as kmeansCentroids — m·codes×sub doubles
     val memoKey = SnapshotKey.of(emb).map((_, m, codes, iterations))
-    val memoHit: Option[Array[(Int, Int, Seq[Double])]] = memoKey.flatMap { mk =>
-      booksMemo.synchronized {
-        booksMemo.get(mk).map { rows =>
-          booksMemo.remove(mk); booksMemo(mk) = rows // LRU touch
-          rows
-        }
-      }
-    }
-    memoHit match {
-      case Some(rows) => return rows.toSeq.toDF("subspace", "cell", "centv")
-      case None => ()
-    }
+    val centRows = memoKey.fold(trainCodebooks(emb, m, codes, iterations))(
+      booksMemo(_)(trainCodebooks(emb, m, codes, iterations)))
+    centRows.toSeq.toDF("subspace", "cell", "centv")
+  }
+
+  private def trainCodebooks(emb: DataFrame, m: Int, codes: Int,
+                             iterations: Int): Array[(Int, Int, Seq[Double])] = {
+    val spark = emb.sparkSession
+    import spark.implicits._
     val sub = embeddingDim(emb) / m
     val subs = array((0 until m).map(i => struct(lit(i).as("subspace"),
       slice(col("embedding"), i * sub + 1, sub).as("sv"))): _*)
@@ -612,13 +591,13 @@ object Similarity {
       // over the un-exploded corpus; same dist2 op order, same
       // (dist2 asc, cell asc) tie-break — codebooks are bit-identical.
       // r15 measured-and-NOT-adopted: the in-row per-subspace argmin
-      // (the pqEncode/lloydAssignIvf treatment — LloydProbe keeps the
-      // implementation and the A/B) removes this join+window, but the
+      // (the pqEncode/lloydAssignIvf treatment; OPTIMIZATION_r15.md,
+      // VERDICT item 1) removes this join+window, but the
       // full-training same-JVM A/B read it ~0.7-0.8 s SLOWER per
       // training (new 1.87-2.61 s vs old 1.16-1.39 s, 4 reps, both
       // orderings) at sf0.1: each iteration re-plans a 4×16-literal
       // projection whose fresh-literal re-plan/JIT warm costs
-      // ~0.4 s/iteration (LloydProbe diag3), which dwarfs the exec win
+      // ~0.4 s/iteration, which dwarfs the exec win
       // on a 2000-row training set — and unlike the IVF loop's
       // crossJoin, this join fans out on the SUBSPACE key (16×
       // per-subspace rows, 16-dim payloads), cheap enough that the
@@ -650,13 +629,7 @@ object Similarity {
         (s, c, next.getOrElse((s, c), prev))
       }
     }
-    memoKey.foreach { mk =>
-      booksMemo.synchronized {
-        booksMemo(mk) = centRows
-        while (booksMemo.size > TrainMemoMax) booksMemo.remove(booksMemo.head._1)
-      }
-    }
-    toLocal(centRows)
+    centRows
   }
 
   /** Embedding width probed from one row — a limit-1 action (the array
@@ -737,23 +710,7 @@ object Similarity {
     // codebooks) — encoding is the write-time indexing job at scale
     val codesDf = SnapshotKey.of(emb).map((_, m, codes, iterations)) match {
       case None => pqEncode(emb, books, m)
-      case Some(mk) => codesMemo.synchronized {
-        codesMemo.get(mk) match {
-          case Some(c) if c.storageLevel !=
-              org.apache.spark.storage.StorageLevel.NONE =>
-            codesMemo.remove(mk); codesMemo(mk) = c // LRU touch
-            c
-          case _ =>
-            val c = pqEncode(emb, books, m)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            codesMemo(mk) = c
-            while (codesMemo.size > TrainMemoMax) {
-              val (k0, old) = codesMemo.head
-              codesMemo.remove(k0); old.unpersist(blocking = false)
-            }
-            c
-        }
-      }
+      case Some(mk) => codesMemo(mk)(ArtifactCache.persist(pqEncode(emb, books, m)))
     }
     searchPq(codesDf, books, emb.filter(col("vec_id") < nQueries), emb,
       k, m, shortlist)
@@ -876,7 +833,7 @@ object Similarity {
     * knobs: per-table precision comes from `planes` (size buckets
     * O(1) by setting planes ≈ log₂ n — 2^planes scales WITH the
     * corpus, so candidates stay O(tables·n), measured linear-vs-
-    * quadratic in SCALE.md's BandedGrowthProbe table), recall from
+    * quadratic in SCALE.md's "Candidate-pair growth" table), recall from
     * `tables` (a true pair is missed only if it splits in EVERY
     * table: miss ≈ (1-(1-θ/π)^planes)^tables). Candidates from table
     * 0's planes are exactly the round-9 single-table candidates, so
@@ -948,7 +905,7 @@ object Similarity {
   }
 
   /** Round-9's single-table blocking, retained ONLY as the quadratic
-    * baseline for the BandedGrowthProbe (SCALE.md) and the DedupSpec
+    * baseline in SCALE.md's "Candidate-pair growth" table and the DedupSpec
     * recall-dominance pin — production callers use [[nearDupPairsLsh]].
     * One `planes`-plane bucket per vector; the within-bucket self-join
     * is O(n²/2^planes) with a FIXED bucket count, the shape that goes

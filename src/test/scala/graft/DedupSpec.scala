@@ -517,30 +517,44 @@ class DedupSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     Dedup.releaseCaches()
     Dedup.decontaminateBloomChecked(docs) // cold: builds + memoizes
+    // The listener bus is asynchronous, so the cold call's events may
+    // still be queued. Count only between two marker jobs: the bus
+    // delivers in posting order, so every event the listener sees after
+    // the first marker and before the second was posted by the warm call.
+    val markerProp = "graft.test.marker"
+    val markers = new AtomicInteger
     val execs = new AtomicInteger
     val rddJobs = new AtomicInteger
     val listener = new SparkListener {
       override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-        case _: SparkListenerSQLExecutionStart => execs.incrementAndGet()
+        case _: SparkListenerSQLExecutionStart if markers.get == 1 => execs.incrementAndGet()
         case _ => ()
       }
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        if (js.properties == null ||
-            js.properties.getProperty("spark.sql.execution.id") == null)
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty(markerProp) != null)) markers.incrementAndGet()
+        else if (markers.get == 1 &&
+                 props.forall(_.getProperty("spark.sql.execution.id") == null))
           rddJobs.incrementAndGet()
+      }
     }
-    spark.sparkContext.addSparkListener(listener)
+    val sc = spark.sparkContext
+    def marker(n: Int): Unit = {
+      sc.setLocalProperty(markerProp, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(markerProp, null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (markers.get < n && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(markers.get == n, s"listener never saw marker job $n")
+    }
+    sc.addSparkListener(listener)
     val actions =
       try {
+        marker(1)
         Dedup.decontaminateBloomChecked(docs) // warm: memo hit, no jobs
-        var prev = -1
-        var cur = execs.get + rddJobs.get
-        var tries = 0
-        while (cur != prev && tries < 50) {
-          Thread.sleep(100); prev = cur; cur = execs.get + rddJobs.get; tries += 1
-        }
-        cur
-      } finally spark.sparkContext.removeSparkListener(listener)
+        marker(2)
+        execs.get + rddJobs.get
+      } finally sc.removeSparkListener(listener)
     assert(actions == 0,
       s"warm d13 construction launched $actions actions " +
         s"(${execs.get} SQL executions + ${rddJobs.get} RDD jobs) — budget is 0")

@@ -6,8 +6,9 @@ the driver ships.
 Each copy is time-shifted past the previous one by the base span (+1 s),
 so run/session/date structure is preserved instead of piling 1000 copies
 onto the same 30 days; event_ids are re-keyed per copy so (ts, id) stays
-a total order. Same construction as round 5's 10x/30x/100x sets and
-StreakBench's in-memory replicas.
+a total order. Same construction as round 5's 10x/30x/100x sets and the
+in-memory replicas behind SCALE.md's streak-crossover table (StreakBench,
+last in commit 0878ff5).
 
 Usage: make_events_replica.py <baseSfDir> <factor> <outDir>
 e.g.   make_events_replica.py /root/testdata/sf0.1 1000 /tmp/fac100m

@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Dev-only: replicate a testdata table N x into /tmp with distinct ids,
 so operators can be measured on corpus-scale row counts (the sf0.1 files
-are latency-bound, not throughput-bound). Used with graft.ShingleProbe /
-graft.Profile; round-8 numbers in SCALE.md came from these replicas.
+are latency-bound, not throughput-bound). Used with graft.Profile; the
+round-8 numbers in SCALE.md came from these replicas through
+graft.ShingleProbe (last in commit 0878ff5).
 
 Usage: python3 tools/make_scaled.py documents 100   -> /tmp/docs_x100
        python3 tools/make_scaled.py embeddings 100  -> /tmp/emb_x100
